@@ -13,7 +13,7 @@ from pyspark.sql import functions as F
 
 from tms_etl_spark.tms.pipeline import import_daily, prepare_batch
 from tms_etl_spark.tms.quality import is_tear_desligado
-from tms_etl_spark.tms.schema import DAILY_COLUMNS, with_types
+from tms_etl_spark.tms.schema import DAILY_COLUMNS, NUMERIC_COLUMNS, with_types
 from tms_etl_spark.tms.source import read_daily
 
 
@@ -56,17 +56,74 @@ def test_positional_schema():
 
 def test_read_daily_parses_and_coerces(spark, lake):
     df = read_daily(spark, lake)
-    rows = {r["Tear"]: r for r in df.collect()}
+    # column names, types and order of the typed projection: strings
+    # (col3_unused dropped), 66 measures, lineage, derived columns
+    assert len(NUMERIC_COLUMNS) == 66
+    assert NUMERIC_COLUMNS[0] == "Rpm" and NUMERIC_COLUMNS[-1] == "MinGen16"
+    assert [(f.name, f.dataType.simpleString()) for f in df.schema.fields] == (
+        [(c, "string") for c in ("DataTurno", "Tear", "Artigo", "ArtigoGen")]
+        + [(c, "double") for c in NUMERIC_COLUMNS]
+        + [
+            ("_src_file", "string"),
+            ("_src_mtime", "timestamp"),
+            ("data", "date"),
+            ("turno", "string"),
+            ("month", "string"),
+        ]
+    )
+    rows = {(r["Tear"], r["DataTurno"]): r for r in df.collect()}
     # BOM stripped: first column parsed cleanly
-    assert "00001" in rows
-    assert rows["00001"]["DataTurno"] in ("2024-01-05.A", "2024-01-06.A")
+    bom = rows[("00001", "2024-01-06.A")]
+    assert (bom["Rpm"], bom["Eficiencia"], bom["turno"]) == (550.0, 85.5, "A")
+    assert str(bom["data"]) == "2024-01-06"
     # empty string numeric coerced to 0
-    assert rows["00005"]["Rpm"] == 0.0
-    assert rows["00005"]["Eficiencia"] == 85.5
+    r5 = rows[("00005", "2024-01-05.B")]
+    assert r5["Rpm"] == 0.0
+    assert r5["Eficiencia"] == 85.5
     # derived columns
-    assert rows["00002"]["turno"] == "C"
-    assert rows["00002"]["month"] == "2024-01"
-    assert str(rows["00002"]["data"]) == "2024-01-05"
+    r2 = rows[("00002", "2024-01-05.C")]
+    assert r2["turno"] == "C"
+    assert r2["month"] == "2024-01"
+    assert str(r2["data"]) == "2024-01-05"
+    assert r2["_src_file"].endswith("/2024-01/daily/2024-01-05.csv")
+    assert r2["_src_mtime"] is not None
+    # truncated row: leading fields parsed, missing tail → 0.0
+    r6 = rows[("00006", "2024-01-05.A")]
+    assert (r6["Rpm"], r6["Parado"], r6["MinGen16"]) == (550.0, 40.0, 0.0)
+    # short row: parsed (the arity filter drops it later), nulls → 0.0
+    short = rows[("row", "short")]
+    assert short["Artigo"] is None and short["data"] is None
+    assert (short["Rpm"], short["MinGen16"]) == (0.0, 0.0)
+    assert (short["turno"], short["month"]) == ("", "short")
+
+
+def test_read_daily_malformed_key_and_padding(spark, tmp_path):
+    d = tmp_path / "mk" / "2024-01" / "daily"
+    d.mkdir(parents=True)
+    (d / "2024-01-07.csv").write_text(
+        "\n".join(
+            [
+                # malformed DataTurno, padded measure, non-numeric measure
+                _row("2024-13-45.A", "00007", ef=" 12.5 ", par="abc"),
+                # padded key fields are trimmed before deriving columns
+                _row(" 2024-01-07.B ", " 00008 "),
+            ]
+        ),
+        encoding="utf-8",
+    )
+    rows = {r["Tear"]: r for r in read_daily(spark, str(tmp_path / "mk")).collect()}
+    bad = rows["00007"]
+    assert bad["DataTurno"] == "2024-13-45.A"
+    assert bad["data"] is None  # try_to_date: null, never an error
+    assert (bad["turno"], bad["month"]) == ("A", "2024-13")
+    assert (bad["Eficiencia"], bad["Parado"]) == (12.5, 0.0)
+    pad = rows["00008"]
+    assert pad["DataTurno"] == "2024-01-07.B"
+    assert (str(pad["data"]), pad["turno"], pad["month"]) == (
+        "2024-01-07",
+        "B",
+        "2024-01",
+    )
 
 
 def test_desligado_predicate(spark, lake):
@@ -210,3 +267,166 @@ def test_snapshot_diff_classifies_all_change_types(spark):
     # 1 unchanged (absent), 2 updated (s), 3 updated (NULL->value),
     # 4 deleted, 5 inserted
     assert got == {2: "update", 3: "update", 4: "delete", 5: "insert"}
+
+
+def _write_lake(root, files):
+    """``files``: {(month, day-file name): [csv rows]}."""
+    for (month, name), rows in files.items():
+        d = root / month / "daily"
+        d.mkdir(parents=True, exist_ok=True)
+        (d / name).write_text("\n".join(rows), encoding="utf-8")
+    return str(root)
+
+
+def _touched_rows(spark, table, months):
+    from tms_etl_spark.operators.versioned import read_version
+
+    return read_version(spark, table).where(F.col("month").isin(months)).count()
+
+
+def _head_manifest(spark, table):
+    from tms_etl_spark.operators.versioned import (
+        _manifest_path,
+        _read_json,
+        current_version,
+    )
+
+    return _read_json(spark, _manifest_path(table, current_version(spark, table)))
+
+
+def test_versioned_table_rows_from_metadata(spark, tmp_path):
+    """``ImportStats.table_rows`` equals a scan of the touched months:
+    from manifest row counts on a plain re-import, from the fallback
+    scan once deletion vectors exist, and from the head snapshot on a
+    ``txn_id`` replay."""
+    from tms_etl_spark.operators.versioned import (
+        count_rows_metadata,
+        current_version,
+        delete_rows,
+    )
+    from tms_etl_spark.tms.pipeline import import_daily_versioned
+
+    lake = tmp_path / "lake"
+    table = str(tmp_path / "fact")
+    _write_lake(
+        lake,
+        {
+            ("2024-01", "2024-01-05.csv"): [
+                _row("2024-01-05.A", t) for t in ("00001", "00002", "00003")
+            ],
+            ("2024-02", "2024-02-05.csv"): [
+                _row("2024-02-05.A", t) for t in ("00001", "00002")
+            ],
+        },
+    )
+    first = import_daily_versioned(spark, str(lake), table)
+    assert (first.batch_rows, first.table_rows) == (5, 5)
+
+    # plain re-import of one month: a new key lands in February
+    _write_lake(
+        lake,
+        {("2024-02", "2024-02-06.csv"): [_row("2024-02-06.B", "00004", ef="1.0")]},
+    )
+    st = import_daily_versioned(spark, str(lake), table, months=["2024-02"])
+    assert st.batch_rows == 3
+    assert st.table_rows == _touched_rows(spark, table, ["2024-02"]) == 3
+    # ... answered by the manifest, not a scan
+    assert count_rows_metadata(_head_manifest(spark, table), ("month", ["2024-02"])) == 3
+    assert count_rows_metadata(_head_manifest(spark, table), ("month", ["2024-01"])) == 3
+
+    # deletion vectors force the scan fallback
+    delete_rows(
+        spark,
+        table,
+        spark.createDataFrame([("2024-01-05.A", "00003")], "DataTurno string, Tear string"),
+    )
+    _write_lake(
+        lake,
+        {("2024-02", "2024-02-07.csv"): [_row("2024-02-07.C", "00001")]},
+    )
+    st = import_daily_versioned(spark, str(lake), table, months=["2024-02"])
+    man = _head_manifest(spark, table)
+    assert man.get("deletes")  # January's live files are still covered
+    assert count_rows_metadata(man, ("month", ["2024-02"])) is None
+    assert st.table_rows == _touched_rows(spark, table, ["2024-02"]) == 4
+    assert _touched_rows(spark, table, ["2024-01"]) == 2
+
+    # txn_id replay: no new commit, table_rows counts the head snapshot
+    import_daily_versioned(spark, str(lake), table, months=["2024-01"], txn_id="t1")
+    _write_lake(
+        lake,
+        {("2024-01", "2024-01-08.csv"): [_row("2024-01-08.A", "00009")]},
+    )
+    import_daily_versioned(spark, str(lake), table, months=["2024-01"])
+    head = current_version(spark, table)
+    st = import_daily_versioned(spark, str(lake), table, months=["2024-01"], txn_id="t1")
+    assert current_version(spark, table) == head
+    # the replayed batch's 3 January keys plus the later 2024-01-08 row
+    assert st.table_rows == _touched_rows(spark, table, ["2024-01"]) == 4
+
+
+def test_session_keeps_analysis_errors_without_call_sites(spark):
+    """The session turns DataFrame call-site capture off; analysis
+    errors still name the unresolved column."""
+    from pyspark.errors import AnalysisException
+
+    assert spark.conf.get("spark.python.sql.dataFrameDebugging.enabled") == "false"
+    with pytest.raises(AnalysisException, match="no_such_column"):
+        spark.range(1).select(F.col("no_such_column")).collect()
+
+
+def test_reimport_round_trip_budget(spark, tmp_path):
+    """Guard on driver round trips: a re-import into a tiny versioned
+    table stays within a bounded number of py4j gateway commands and
+    Spark jobs, so a per-column Column builder (a few commands per
+    column of the 71-column fact) cannot creep back unnoticed. Measured
+    on this fixture: 800 commands and 17 jobs; with per-column plan
+    building and three passes over the batch it took 11,424 commands
+    and 24 jobs. The command ceiling is twice the measured count; the
+    job ceiling sits just under the three-pass count."""
+    import gc
+
+    import py4j.clientserver as cs
+
+    from tms_etl_spark.tms.pipeline import import_daily_versioned
+
+    lake = tmp_path / "lake"
+    table = str(tmp_path / "fact")
+    _write_lake(
+        lake,
+        {
+            (m, f"{m}-0{d}.csv"): [
+                _row(f"{m}-0{d}.{s}", t) for s in "ABC" for t in ("00001", "00002")
+            ]
+            for m in ("2024-01", "2024-02")
+            for d in (1, 2)
+        },
+    )
+    import_daily_versioned(spark, str(lake), table)
+    _write_lake(
+        lake,
+        {("2024-02", "2024-02-02.csv"): [_row("2024-02-02.A", "00001", ef="1.0")]},
+    )
+
+    sent = [0]
+    orig = cs.ClientServerConnection.send_command
+
+    def counting(self, command, *args, **kwargs):
+        sent[0] += 1
+        return orig(self, command, *args, **kwargs)
+
+    sc = spark.sparkContext
+    group = "reimport-round-trip-budget"
+    gc.disable()  # py4j garbage-collection callbacks are commands too
+    cs.ClientServerConnection.send_command = counting
+    try:
+        sc.setJobGroup(group, "round-trip budget")
+        import_daily_versioned(spark, str(lake), table, months=["2024-02"])
+    finally:
+        cs.ClientServerConnection.send_command = orig
+        gc.enable()
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+    assert sent[0] < 1600, sent[0]
+    assert jobs < 24, jobs

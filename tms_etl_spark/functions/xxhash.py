@@ -5,7 +5,7 @@ small-input path per column, chaining the running hash as the next
 column's seed (seed 42 to start) — see
 ``org.apache.spark.sql.catalyst.expressions.XxHash64`` /
 ``o.a.s.sql.catalyst.expressions.XXH64`` (Apache Spark source,
-``hashInt``/``hashLong``/``fmix``). Re-implementing it driver-side
+``hashInt``/``fmix``). Re-implementing it driver-side
 lets operators that derive *deterministic pseudo-randomness* from
 xxhash64 (LSH hyperplanes, MinHash coefficients) compute the same
 values for a literal (e.g. an ANN query vector) in plain Python —
@@ -46,14 +46,6 @@ def _hash_int(value: int, seed: int) -> int:
     return _fmix(h)
 
 
-def _hash_long(value: int, seed: int) -> int:
-    """XXH64 of one 8-byte long (Spark hashes LongType this way)."""
-    h = (seed + _P5 + 8) & _M64
-    k1 = (_rotl((value & _M64) * _P2 & _M64, 31) * _P1) & _M64
-    h = (_rotl(h ^ k1, 27) * _P1 + _P4) & _M64
-    return _fmix(h)
-
-
 def _signed(u: int) -> int:
     return u - (1 << 64) if u >= (1 << 63) else u
 
@@ -65,14 +57,6 @@ def xxhash64_ints(*values: int, seed: int = 42) -> int:
     h = seed & _M64
     for v in values:
         h = _hash_int(v, h)
-    return _signed(h)
-
-
-def xxhash64_longs(*values: int, seed: int = 42) -> int:
-    """Same, for values Spark types as LongType."""
-    h = seed & _M64
-    for v in values:
-        h = _hash_long(v, h)
     return _signed(h)
 
 

@@ -30,6 +30,11 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 
+def sql_ident(name: str) -> str:
+    """``name`` as a backtick-quoted SQL identifier."""
+    return "`" + name.replace("`", "``") + "`"
+
+
 def dedupe_batch(
     source: DataFrame,
     keys: Sequence[str],
@@ -63,18 +68,20 @@ def dedupe_batch(
     precedence ties (e.g. duplicates within one source file, where
     mtime and filename are equal) resolve deterministically by row
     content instead of by whichever partition's partial aggregate
-    lands last. 8 bytes of extra shuffle payload, not a row copy."""
+    lands last. 8 bytes of extra shuffle payload, not a row copy.
+
+    The row struct is one SQL expression and the unpack is
+    ``__row.*``: a wide batch (the TMS fact has 70+ columns) would
+    otherwise pay a few py4j round trips per column on the driver."""
     others = [c for c in source.columns if c not in keys]
     pref = list(precedence) if precedence is not None else [F.lit(1)]
-    row = F.struct(*[F.col(c) for c in others])
+    row = F.expr(f"struct({', '.join(sql_ident(c) for c in others)})")
     if content_tiebreak:
         pref.append(F.xxhash64(row))
-    won = source.groupBy(*[F.col(k) for k in keys]).agg(
+    won = source.groupBy(*keys).agg(
         F.max_by(row, F.struct(*pref)).alias("__row")
     )
-    return won.select(
-        *keys, *[F.col(f"__row.{c}").alias(c) for c in others]
-    )
+    return won.select(*keys, "__row.*")
 
 
 def upsert(target: DataFrame, source: DataFrame, keys: Sequence[str]) -> DataFrame:

@@ -131,33 +131,6 @@ def sql_score(x: str, prefix: str, q: int) -> str:
     return f"CAST(1 + {parts} AS INTEGER)"
 
 
-def histogram_rank_values(
-    df: DataFrame,
-    col: str,
-    ranks: Sequence[int],
-    prefix: str = "r",
-    n_buckets: int = 256,
-) -> DataFrame:
-    """1-row DataFrame with ``{prefix}1.. ``: the value at each
-    1-based RANK of the sorted multiset (``min v with count(≤v) ≥
-    rank``) — the order-statistic reader over the same bucketed
-    cumulative histogram as `histogram_quantile_thresholds`. With
-    ranks ((n-1)//2 + 1, n//2 + 1) this yields both middle elements,
-    i.e. an exact interpolated median WITHOUT ``percentile()``'s
-    per-group value buffer (which holds every value of the group in
-    one aggregation buffer — O(n) memory on a single reducer at
-    corpus scale)."""
-    h = _cumulative_histogram(df, col, n_buckets)
-    return h.agg(
-        *[
-            F.min(
-                F.when(F.col("__cum") >= int(r), F.col(col))
-            ).alias(f"{prefix}{i + 1}")
-            for i, r in enumerate(ranks)
-        ]
-    )
-
-
 def histogram_median(
     df: DataFrame, col: str, n_buckets: int = 256
 ) -> DataFrame:

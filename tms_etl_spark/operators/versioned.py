@@ -37,7 +37,7 @@ from __future__ import annotations
 import json
 import re
 from dataclasses import dataclass
-from typing import Sequence
+from typing import Collection, Sequence
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -1073,10 +1073,14 @@ def _read_files(
     out = parts[0]
     for p in parts[1:]:
         out = out.unionByName(p)
-    if schema_log is not None:
+    if schema_log is not None and (
+        cmap or out.columns != schema_log.fieldNames()
+    ):
         # recorded column order regardless of which part came first;
         # mapped tables alias physical → logical here, the one seam
-        # where renamed columns get their current name back
+        # where renamed columns get their current name back. Skipped
+        # when it would be the identity: a per-column projection is a
+        # few py4j round trips per column on every versioned read.
         out = out.select(
             *[
                 F.col(cmap.get(f.name, f.name)).alias(f.name)
@@ -5172,6 +5176,7 @@ def merge_version(
     from operator import and_ as _and, or_ as _or
 
     from pyspark.sql import functions as F
+    from pyspark.sql import types as T
 
     if commit_retries:
         return _with_commit_retries(
@@ -5313,9 +5318,17 @@ def merge_version(
         # un-pinned source's re-scans are pushdown-pruned parquet
         # reads and strictly cheaper than de-broadcast joins; the
         # conditional case keeps the pin because there determinism
-        # (not cost) requires it.
-        source_df = source_df.localCheckpoint(eager=False)
-        _pins.append(source_df)
+        # (not cost) requires it. A source the caller already pinned
+        # (its analyzed plan is a LogicalRDD over a checkpointed RDD)
+        # is used as it is: a second pin would only copy it. A
+        # LogicalRDD over a plain RDD (createDataFrame(rdd)) may
+        # recompute differently, so it is pinned like any plan.
+        plan = source_df._jdf.queryExecution().analyzed()
+        if not (
+            plan.nodeName() == "LogicalRDD" and plan.rdd().isCheckpointed()
+        ):
+            source_df = source_df.localCheckpoint(eager=False)
+            _pins.append(source_df)
 
     # one row per NON-NULL source key tuple, or the merge is
     # nondeterministic. count_distinct ignores NULL-component tuples,
@@ -5413,8 +5426,20 @@ def merge_version(
         # candidates above)
         touched = sorted(candidates)
     elif candidates and not src_empty:
+        reader = spark.read
+        if prev_schema is not None and not set(keys) & set(
+            man.get("partition_by") or []
+        ):
+            # the probe projects only the keys, so their recorded
+            # physical fields are an exact schema — and a given schema
+            # spares Spark a footer-inference job on every MERGE
+            phys = _phys_schema(prev_schema, cmap)
+            if all(pk in phys.fieldNames() for pk in phys_keys):
+                reader = reader.schema(
+                    T.StructType([phys[pk] for pk in phys_keys])
+                )
         probe = (
-            spark.read.parquet(
+            reader.parquet(
                 *[f"{table_dir}/{rel}" for rel in candidates]
             )
             # raw file read: the keys live under their PHYSICAL names
@@ -7479,17 +7504,28 @@ def maintain_table(
     return out
 
 
-def count_rows_metadata(man: dict) -> int | None:
+def count_rows_metadata(
+    man: dict, where_in: tuple[str, Collection] | None = None
+) -> int | None:
     """COUNT(*) of a snapshot from manifest metadata alone, or None
     when metadata cannot answer exactly: deletion vectors pending
     (row-level subtraction) or files committed before per-file row
-    counts were recorded. Pure function of one manifest — zero I/O."""
+    counts were recorded. Pure function of one manifest — zero I/O.
+
+    ``where_in=(col, values)`` counts ``WHERE col IN values`` instead:
+    exact only when every live file's zonemap holds ONE value of
+    ``col`` (min == max — a hive partition column, or a column the
+    writer clustered on), so each file counts whole or not at all;
+    any file without such an entry gives None. ``values`` compare
+    against the manifest's JSON form of the bounds."""
     if man.get("deletes"):
         return None
     stats = man.get("stats", {})
     if not stats:
         return None
     dead = set(man.get("dead_files", []))
+    if where_in is not None:
+        col, wanted = where_in[0], set(where_in[1])
     total = 0
     for rel, e in stats.items():
         if rel in dead:
@@ -7499,6 +7535,12 @@ def count_rows_metadata(man: dict) -> int | None:
             # pre-rowcount commit in the chain, or a data column
             # literally named "__rows" shadowed the counter
             return None
+        if where_in is not None:
+            bounds = e.get(col)
+            if not bounds or bounds[0] != bounds[1]:
+                return None
+            if bounds[0] not in wanted:
+                continue
         total += n
     return total
 
@@ -7591,22 +7633,32 @@ def minmax(
 
 
 def count_rows(
-    spark: SparkSession, table_dir: str, version: int | None = None
+    spark: SparkSession,
+    table_dir: str,
+    version: int | None = None,
+    where_in: tuple[str, Collection] | None = None,
 ) -> int:
     """COUNT(*) with the metadata fast path: snapshots without
     deletion vectors answer from the manifest's per-file row counts —
     zero data I/O, so a 100 TB table's count returns in the time it
     takes to read one JSON. Tombstoned snapshots fall back to the one
-    subtracted scan that defines their row set."""
+    subtracted scan that defines their row set. ``where_in=(col,
+    values)`` counts ``WHERE col IN values`` (see
+    `count_rows_metadata`); its fallback scan filters the same way."""
+    from pyspark.sql import functions as F
+
     cur = current_version(spark, table_dir)
     v = version if version is not None else cur
     if v <= 0:
         raise ValueError(f"no committed versions at {table_dir}")
     man = _read_json(spark, _manifest_path(table_dir, v))
-    n = count_rows_metadata(man)
+    n = count_rows_metadata(man, where_in)
     if n is not None:
         return n
-    return _scan_with_deletes(spark, table_dir, man).count()
+    df = _scan_with_deletes(spark, table_dir, man)
+    if where_in is not None:
+        df = df.where(F.col(where_in[0]).isin(list(where_in[1])))
+    return df.count()
 
 
 def _write_json_overwrite(spark: SparkSession, path: str, payload: dict):

@@ -3,20 +3,17 @@ was MariaDB `tblDadosTeares` via per-row probe+write,
 /root/reference/src/main_01.py:235-305).
 
 The engine's primary MERGE strategy is the join-based one in
-``operators.merge`` (parquet lake). This module completes the S8
-surface for deployments whose serving store is a SQL database:
-distributed batched writes into a staging table, then ONE server-side
-upsert statement — never a per-row round-trip from the driver.
-
-Connectivity is deployment-provided (JDBC driver jar on the
-classpath); SQL generation is pure and unit-tested offline.
+``operators.merge`` (parquet lake). For deployments whose serving
+store is a SQL database, this module generates the ONE server-side
+upsert statement that applies a staging table (written in parallel
+with ``DataFrame.write.jdbc``) to the target — never a per-row
+round-trip from the driver. SQL generation is pure and unit-tested
+offline.
 """
 
 from __future__ import annotations
 
 from collections.abc import Sequence
-
-from pyspark.sql import DataFrame
 
 
 def upsert_sql(
@@ -54,45 +51,3 @@ def upsert_sql(
         f"WHEN MATCHED THEN UPDATE SET {updates} "
         f"WHEN NOT MATCHED THEN INSERT ({cols}) VALUES ({inserts})"
     )
-
-
-def write_jdbc_upsert(
-    df: DataFrame,
-    url: str,
-    table: str,
-    keys: Sequence[str],
-    properties: dict | None = None,
-    dialect: str = "mysql",
-    batchsize: int = 10_000,
-) -> str:
-    """Distributed upsert into a JDBC store: executors append into
-    ``<table>__staging`` in parallel (batched inserts), then the
-    driver issues one server-side upsert + cleanup. Returns the
-    upsert SQL it executed (or would execute), for auditability.
-
-    Raises whatever the JDBC layer raises if no driver jar is
-    present — connectivity is a deployment concern, the plan shape is
-    the engine's.
-    """
-    staging = f"{table}__staging"
-    sql = upsert_sql(staging=staging, table=table, columns=df.columns, keys=keys,
-                     dialect=dialect)
-    (
-        df.write.mode("overwrite")
-        .option("batchsize", batchsize)
-        .option("truncate", "true")
-        .jdbc(url, staging, properties=properties or {})
-    )
-    # one statement server-side; java.sql via the driver's JVM
-    jvm = df.sparkSession._sc._jvm
-    props = jvm.java.util.Properties()
-    for k, v in (properties or {}).items():
-        props.setProperty(k, v)
-    conn = jvm.java.sql.DriverManager.getConnection(url, props)
-    try:
-        st = conn.createStatement()
-        st.execute(sql)
-        st.execute(f"DROP TABLE {staging}")
-    finally:
-        conn.close()
-    return sql

@@ -29,9 +29,13 @@ from tms_etl_spark.tms.source import arity_filter, read_daily
 
 @dataclass
 class ImportStats:
-    """``table_rows`` counts the month partitions this batch touched
-    (post-merge), not the whole table — the stat stays O(batch), not
-    O(history)."""
+    """``batch_rows`` is the deduplicated batch's size; ``table_rows``
+    counts the month partitions this batch touched (post-merge), not
+    the whole table — the stat stays O(batch), not O(history). The
+    versioned import reads ``table_rows`` off the committed manifest's
+    per-file row counts when they are exact (no deletion vectors,
+    every file holding one month), and scans the touched months
+    otherwise."""
 
     batch_rows: int
     table_rows: int
@@ -133,59 +137,67 @@ def import_daily_versioned(
     Extras the parquet path can't give: time travel across imports,
     CDC (`read_version_changes`), snapshot tags, and O(touched-files)
     merge cost via the tuple zonemap cut instead of month-partition
-    overwrite."""
+    overwrite.
+
+    Driver cost: the batch (CSV parse + dedupe shuffle) is pinned once
+    and computed once — its row count and touched months come from
+    one aggregate over the pin, which the MERGE then reuses instead
+    of pinning its own copy. ``table_rows`` comes from the committed
+    manifest's per-file row counts when they are exact, with no scan
+    (see `ImportStats`)."""
     from tms_etl_spark.operators.versioned import (
+        count_rows,
         current_version,
         merge_version,
-        read_version,
         write_version,
     )
     from tms_etl_spark.tms.quality import is_tear_desligado_sql
 
-    batch = prepare_batch(read_daily(spark, lake_root, months, encoding))
-    batch_rows = batch.count()
-    months_touched = [
-        r[0] for r in batch.select("month").distinct().collect()
-    ]
-    if current_version(spark, table_dir) == 0:
-        # first load: desligado rows may insert (no prior record);
-        # month partitioning becomes a table property
-        write_version(
-            batch,
-            table_dir,
-            "append",
-            partition_by=["month"],
-            txn_id=txn_id,
-            commit_retries=commit_retries,
-        )
-    else:
-        merge_version(
-            spark,
-            table_dir,
-            batch,
-            key=list(MERGE_KEYS),
-            txn_id=txn_id,
-            when_matched_condition=(
-                f"NOT ({is_tear_desligado_sql('source')})"
-            ),
-            # optimistic concurrency: a lost race against a DISJOINT
-            # writer (another month's import, an append) re-runs; a
-            # real conflict raises the named error — safe because the
-            # batch derives deterministically from the CSV files
-            commit_retries=commit_retries,
-        )
-    # Touched-month stat via a Column predicate, NOT an interpolated
-    # SQL string: `month` is data-derived (substring of DataTurno from
-    # CSVs), and a malformed value containing a quote would break the
-    # expression AFTER the merge already committed. `month` is the
-    # hive partition column, so Catalyst partition-prunes the isin —
-    # same O(touched-partitions) cost the SQL form had (IN lists never
-    # drove manifest zonemap pruning anyway, per read_version_where).
+    batch = prepare_batch(
+        read_daily(spark, lake_root, months, encoding)
+    ).localCheckpoint(eager=False)
+    try:
+        stat = batch.agg(
+            F.count(F.lit(1)).alias("n"), F.collect_set("month").alias("m")
+        ).head()
+        if current_version(spark, table_dir) == 0:
+            # first load: desligado rows may insert (no prior record);
+            # month partitioning becomes a table property
+            write_version(
+                batch,
+                table_dir,
+                "append",
+                partition_by=["month"],
+                txn_id=txn_id,
+                commit_retries=commit_retries,
+            )
+        else:
+            merge_version(
+                spark,
+                table_dir,
+                batch,
+                key=list(MERGE_KEYS),
+                txn_id=txn_id,
+                when_matched_condition=(
+                    f"NOT ({is_tear_desligado_sql('source')})"
+                ),
+                # optimistic concurrency: a lost race against a
+                # DISJOINT writer (another month's import, an append)
+                # re-runs; a real conflict raises the named error —
+                # safe because the batch derives deterministically
+                # from the CSV files
+                commit_retries=commit_retries,
+            )
+    finally:
+        unpersist_checkpoint(batch)
+    months_touched = sorted(stat["m"])
+    # `month` is data-derived (a substring of DataTurno from CSVs), so
+    # it travels as values, never as interpolated SQL text: a quote in
+    # a malformed value would break the expression AFTER the merge
+    # already committed
     table_rows = (
-        read_version(spark, table_dir)
-        .where(F.col("month").isin(months_touched))
-        .count()
+        count_rows(spark, table_dir, where_in=("month", months_touched))
         if months_touched
         else 0
     )
-    return ImportStats(batch_rows=batch_rows, table_rows=table_rows)
+    return ImportStats(batch_rows=stat["n"], table_rows=table_rows)

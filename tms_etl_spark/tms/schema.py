@@ -10,9 +10,11 @@ Column order mirrors the reference's positional index→name map
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from tms_etl_spark.operators.merge import sql_ident
 
 _STOP_REASONS = (
     "ParadasUrdume",
@@ -58,28 +60,36 @@ RAW_SCHEMA = T.StructType(
 MERGE_KEYS = ("DataTurno", "Tear")  # upsert key, /root/reference/src/main_01.py:243
 
 
-def num(col: str) -> Column:
-    """P7: ``float(x or 0)`` → try_cast to double, '' / invalid / missing → 0."""
-    return F.coalesce(F.trim(F.col(col)).try_cast("double"), F.lit(0.0))
-
-
 def with_types(raw: DataFrame) -> DataFrame:
     """Typed projection of a raw positional frame: trims strings,
     coerces measures (P7), derives ``data`` (DATE), ``turno`` (A/B/C)
     and ``month`` (partition column) from the DataTurno shift key
-    ``YYYY-MM-DD.X`` (SURVEY.md §1.1)."""
-    cols: list[Column] = [
-        F.trim(F.col(c)).alias(c) for c in STRING_COLUMNS if c != "col3_unused"
+    ``YYYY-MM-DD.X`` (SURVEY.md §1.1).
+
+    Built as SQL expression text, one string per column: the Column
+    API costs several py4j round trips per call, and this projection
+    has 70 columns on every import and streaming micro-batch."""
+    exprs = [
+        f"trim({sql_ident(c)}) AS {sql_ident(c)}"
+        for c in STRING_COLUMNS
+        if c != "col3_unused"
     ]
-    cols += [num(c).alias(c) for c in NUMERIC_COLUMNS]
+    # P7: ``float(x or 0)`` → try_cast to double, '' / invalid / missing → 0
+    exprs += [
+        f"coalesce(try_cast(trim({sql_ident(c)}) AS DOUBLE), 0.0D) "
+        f"AS {sql_ident(c)}"
+        for c in NUMERIC_COLUMNS
+    ]
     # carry through any non-schema columns (e.g. _src_file lineage)
-    extras = [c for c in raw.columns if c not in DAILY_COLUMNS]
-    df = raw.select(*cols, *extras)
-    date_part = F.substring("DataTurno", 1, 10)
-    return (
-        # try_to_date: malformed keys → null (ANSI-safe; the arity
-        # filter drops them downstream, P2)
-        df.withColumn("data", F.try_to_date(date_part, "yyyy-MM-dd"))
-        .withColumn("turno", F.substring("DataTurno", 12, 1))
-        .withColumn("month", F.substring("DataTurno", 1, 7))
+    exprs += [sql_ident(c) for c in raw.columns if c not in DAILY_COLUMNS]
+    return raw.selectExpr(*exprs).withColumns(
+        {
+            # try_to_date: malformed keys → null (ANSI-safe; the arity
+            # filter drops them downstream, P2)
+            "data": F.expr(
+                "try_to_date(substring(DataTurno, 1, 10), 'yyyy-MM-dd')"
+            ),
+            "turno": F.expr("substring(DataTurno, 12, 1)"),
+            "month": F.expr("substring(DataTurno, 1, 7)"),
+        }
     )
