@@ -7,6 +7,7 @@ idempotence, first-write-wins, newest-file-wins precedence.
 from __future__ import annotations
 
 import codecs
+import contextlib
 
 import pytest
 from pyspark.sql import functions as F
@@ -375,6 +376,31 @@ def test_session_keeps_analysis_errors_without_call_sites(spark):
         spark.range(1).select(F.col("no_such_column")).collect()
 
 
+@contextlib.contextmanager
+def _gateway_commands():
+    """Count the py4j gateway commands sent inside the block: yields a
+    one-item list holding the running count. Garbage collection is
+    paused, as py4j's garbage-collection callbacks are commands too."""
+    import gc
+
+    import py4j.clientserver as cs
+
+    sent = [0]
+    orig = cs.ClientServerConnection.send_command
+
+    def counting(self, command, *args, **kwargs):
+        sent[0] += 1
+        return orig(self, command, *args, **kwargs)
+
+    gc.disable()
+    cs.ClientServerConnection.send_command = counting
+    try:
+        yield sent
+    finally:
+        cs.ClientServerConnection.send_command = orig
+        gc.enable()
+
+
 def test_reimport_round_trip_budget(spark, tmp_path):
     """Guard on driver round trips: a re-import into a tiny versioned
     table stays within a bounded number of py4j gateway commands and
@@ -384,10 +410,6 @@ def test_reimport_round_trip_budget(spark, tmp_path):
     building and three passes over the batch it took 11,424 commands
     and 24 jobs. The command ceiling is twice the measured count; the
     job ceiling sits just under the three-pass count."""
-    import gc
-
-    import py4j.clientserver as cs
-
     from tms_etl_spark.tms.pipeline import import_daily_versioned
 
     lake = tmp_path / "lake"
@@ -408,25 +430,52 @@ def test_reimport_round_trip_budget(spark, tmp_path):
         {("2024-02", "2024-02-02.csv"): [_row("2024-02-02.A", "00001", ef="1.0")]},
     )
 
-    sent = [0]
-    orig = cs.ClientServerConnection.send_command
-
-    def counting(self, command, *args, **kwargs):
-        sent[0] += 1
-        return orig(self, command, *args, **kwargs)
-
     sc = spark.sparkContext
     group = "reimport-round-trip-budget"
-    gc.disable()  # py4j garbage-collection callbacks are commands too
-    cs.ClientServerConnection.send_command = counting
     try:
-        sc.setJobGroup(group, "round-trip budget")
-        import_daily_versioned(spark, str(lake), table, months=["2024-02"])
+        with _gateway_commands() as sent:
+            sc.setJobGroup(group, "round-trip budget")
+            import_daily_versioned(spark, str(lake), table, months=["2024-02"])
     finally:
-        cs.ClientServerConnection.send_command = orig
-        gc.enable()
         sc.setLocalProperty("spark.jobGroup.id", None)
         sc.setLocalProperty("spark.job.description", None)
     jobs = len(sc.statusTracker().getJobIdsForGroup(group))
     assert sent[0] < 1600, sent[0]
     assert jobs < 24, jobs
+
+
+def test_point_read_round_trips_flat_in_history(spark, tmp_path):
+    """A point read's driver round trips do not grow with the table's
+    history: the py4j commands of one `read_version_where` plus its
+    collect match within a small constant at 2 and at 12 committed
+    versions of the same live files (versions 3-12 are rollbacks to
+    v2, so the scan is identical). Listing ``_manifests`` through
+    Hadoop costs several commands per manifest, so a metadata path
+    that lists or walks the history shows up here."""
+    from tms_etl_spark.operators.versioned import (
+        current_version,
+        read_version_where,
+        rollback,
+        write_version,
+    )
+
+    table = str(tmp_path / "fact")
+    df = spark.createDataFrame(
+        [(i, f"2024-0{1 + i % 2}") for i in range(20)], "id int, month string"
+    )
+    write_version(df.where("id < 10"), table)
+    write_version(df.where("id >= 10"), table)
+
+    def point_read() -> int:
+        rows = read_version_where(spark, table, "id = 13").collect()
+        assert [r["id"] for r in rows] == [13]
+        with _gateway_commands() as sent:
+            read_version_where(spark, table, "id = 13").collect()
+        return sent[0]
+
+    at_2 = point_read()
+    for _ in range(10):
+        rollback(spark, table, to_version=2)
+    assert current_version(spark, table) == 12
+    at_12 = point_read()
+    assert abs(at_12 - at_2) <= 8, (at_2, at_12)

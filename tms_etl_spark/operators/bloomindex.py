@@ -145,14 +145,13 @@ def extend_bloom_index(
     v = version if version is not None else cur
     root = f"{table_dir}/_indexes/{col}"
     prev_v = 0
-    if path_exists(spark, root):
-        for fi in list_files(spark, root):
-            # list_files yields FILE paths (…/vNNN-bloom/part-*.parquet);
-            # match the dir segment, not end-of-string, else prev_v stays 0
-            # and extend always falls back to a full-table rebuild.
-            m = _re.search(r"v(\d+)-bloom(?:/|$)", fi.path)
-            if m and int(m.group(1)) < v:
-                prev_v = max(prev_v, int(m.group(1)))
+    for fi in list_files(spark, root):
+        # list_files yields FILE paths (…/vNNN-bloom/part-*.parquet);
+        # match the dir segment, not end-of-string, else prev_v stays 0
+        # and extend always falls back to a full-table rebuild.
+        m = _re.search(r"v(\d+)-bloom(?:/|$)", fi.path)
+        if m and int(m.group(1)) < v:
+            prev_v = max(prev_v, int(m.group(1)))
     if prev_v == 0:
         return build_bloom_index(spark, table_dir, col, v)
 
@@ -337,8 +336,15 @@ def read_version_point(
     ``version``, ``asof`` (TIMESTAMP AS OF) and ``tag`` are mutually
     exclusive — "point-read the release-blessed snapshot" is
     ``tag='release'``, no by-hand tag resolution. The sidecar probes
-    at the RESOLVED version: an index generation at or before it
-    covers the files it indexed, later files scan conservatively."""
+    only the generation built AT the resolved version
+    (`bloom_admitted_files` looks at ``_index_dir(…, version)``), so
+    after any later commit the probe finds none and the read is the
+    plain filtered scan until `extend_bloom_index` (or
+    `maintain_table`) builds that version's generation. Falling back
+    to an older generation is deliberately not done: the probe would
+    add its jobs to every point read of a freshly committed table,
+    including `read_version_where`'s, whose zonemaps already prune by
+    partition there."""
     from tms_etl_spark.operators.versioned import (
         resolve_tag,
         version_asof,

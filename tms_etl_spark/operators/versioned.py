@@ -42,7 +42,13 @@ from typing import Collection, Sequence
 from pyspark.sql import DataFrame, SparkSession
 
 from tms_etl_spark.operators.checkpoints import unpersist_checkpoint
-from tms_etl_spark.sources.fs import _fs, list_files, path_exists
+from tms_etl_spark.sources.fs import (
+    FileInfo,
+    _fs,
+    list_files,
+    local_path,
+    path_exists,
+)
 
 _MANIFESTS = "_manifests"
 _DATA = "data"
@@ -53,6 +59,10 @@ def _manifest_path(table_dir: str, version: int) -> str:
 
 
 def _read_json(spark: SparkSession, path: str) -> dict:
+    local = local_path(spark, path)
+    if local is not None:
+        with open(local, "rb") as f:
+            return json.loads(f.read())
     fs, jvm_path, jvm = _fs(spark, path)
     stream = fs.open(jvm_path)
     try:
@@ -133,7 +143,7 @@ def _write_json_atomic(spark: SparkSession, path: str, payload: dict) -> None:
     """Write to a writer-private tmp, then commit-if-absent — the
     conditional-commit point that arbitrates racing writers.
 
-    LOCAL paths (scheme '' or 'file') use a pure-POSIX protocol,
+    LOCAL paths (`fs.local_path`) use a pure-POSIX protocol,
     because Hadoop's LOCAL ``createNewFile`` is check-then-create
     (a TOCTOU window two processes can both slip through — observed
     under the two-JVM race test) and its local rename semantics on a
@@ -164,18 +174,16 @@ def _write_json_atomic(spark: SparkSession, path: str, payload: dict) -> None:
     bare S3."""
     import time
     import uuid
-    from urllib.parse import urlparse
 
     # every commit path funnels through here, so this is the one
     # place to stamp the commit wall-clock (timestamp time travel,
     # `version_asof`); pre-stamped payloads (tests) pass through
     payload.setdefault("committed_at", time.time())
     data = json.dumps(payload).encode("utf-8")
-    parsed = urlparse(path)
-    if parsed.scheme in ("", "file"):
+    local = local_path(spark, path)
+    if local is not None:
         import os
 
-        local = parsed.path if parsed.scheme else path
         os.makedirs(os.path.dirname(local), exist_ok=True)
         lock = local + ".lock"
         try:
@@ -240,18 +248,33 @@ def _write_json_atomic(spark: SparkSession, path: str, payload: dict) -> None:
         fs.delete(lock, False)
 
 
+def _manifest_versions(
+    spark: SparkSession, table_dir: str
+) -> list[tuple[int, FileInfo]]:
+    """``(version, manifest file)`` of every committed, unexpired
+    version, ascending — one listing of ``_manifests`` (none yet →
+    [])."""
+    return _committed_manifests(
+        list_files(spark, f"{table_dir}/{_MANIFESTS}", "v*.json")
+    )
+
+
+def _committed_manifests(files: list[FileInfo]) -> list[tuple[int, FileInfo]]:
+    """The committed manifests in a listing of ``_manifests`` (tmp and
+    lock files of in-flight commits are not ``v<N>.json``)."""
+    out = []
+    for fi in files:
+        m = re.fullmatch(r"v(\d+)\.json", fi.path.rsplit("/", 1)[-1])
+        if m:
+            out.append((int(m.group(1)), fi))
+    return sorted(out, key=lambda e: e[0])
+
+
 def current_version(spark: SparkSession, table_dir: str) -> int:
     """Highest COMMITTED version (0 if the table doesn't exist yet).
     Reads only the manifest listing — metadata-sized."""
-    root = f"{table_dir}/{_MANIFESTS}"
-    if not path_exists(spark, root):
-        return 0
-    best = 0
-    for fi in list_files(spark, root):
-        name = fi.path.rsplit("/", 1)[-1]
-        if name.startswith("v") and name.endswith(".json"):
-            best = max(best, int(name[1:-5]))
-    return best
+    committed = _manifest_versions(spark, table_dir)
+    return committed[-1][0] if committed else 0
 
 
 @dataclass(frozen=True)
@@ -330,21 +353,20 @@ def _footer_file_stats(
       the same min==max entry the aggregation derives via partition
       discovery; ``__HIVE_DEFAULT_PARTITION__`` → all-null.
 
-    Local filesystem only (footers via direct reads); any non-flat
+    ``table_dir`` is a local POSIX directory (the caller resolves it
+    with `fs.local_path`: footers are read directly); any non-flat
     schema (array/map/struct null counts are leaf-level in footers,
     not row-level), ambiguity (a partition column also present in
     the file), or decode surprise returns ``None``."""
     import os
-    from urllib.parse import unquote, urlparse
+    from urllib.parse import unquote
 
-    parsed = urlparse(table_dir)
-    if parsed.scheme not in ("", "file") or schema is None:
+    if schema is None:
         return None
     for f in schema.fields:
         if "<" in f.dataType.simpleString():
             return None  # nested type: footer null counts are leaf-level
-    base = parsed.path if parsed.scheme else table_dir
-    root = os.path.join(base, *rel_dir.split("/"))
+    root = os.path.join(table_dir, *rel_dir.split("/"))
     try:
         import pyarrow.parquet as _pq
 
@@ -532,8 +554,9 @@ def _dir_file_stats(
     fallback for everything the footers cannot prove."""
     from pyspark.sql import functions as F
 
-    if schema is not None:
-        fast = _footer_file_stats(table_dir, rel_dir, schema, column_map)
+    local = local_path(spark, table_dir)
+    if schema is not None and local is not None:
+        fast = _footer_file_stats(local, rel_dir, schema, column_map)
         if fast is not None:
             return fast
 
@@ -1530,14 +1553,16 @@ def read_version(
     A multi-path parquet scan — pushdown/pruning apply per file;
     logically-deleted rows (see `delete_rows`) are subtracted by an
     anti-join against the scoped tombstone set."""
-    cur = current_version(spark, table_dir)
-    v = version if version is not None else cur
-    if v <= 0 or v > cur:
-        raise ValueError(
-            f"version {v} not committed at {table_dir} (current {cur})"
-        )
+    v = version if version is not None else current_version(spark, table_dir)
     p = _manifest_path(table_dir, v)
-    if not path_exists(spark, p):
+    # a present manifest proves ``v`` committed; the head is listed
+    # only to tell "never committed" from "expired" on a miss
+    if v <= 0 or not path_exists(spark, p):
+        cur = current_version(spark, table_dir)
+        if v <= 0 or v > cur:
+            raise ValueError(
+                f"version {v} not committed at {table_dir} (current {cur})"
+            )
         raise ValueError(f"version {v} expired at {table_dir}")
     man = _read_json(spark, p)
     return _scan_with_deletes(spark, table_dir, man)
@@ -1572,13 +1597,11 @@ def version_asof(spark: SparkSession, table_dir: str, ts) -> int:
     mtime. O(versions) metadata reads — listing-scale, no data
     touched. Raises if the table has no version that old."""
     ts = _ts_to_epoch(ts)
-    root = f"{table_dir}/{_MANIFESTS}"
-    if not path_exists(spark, root):
+    committed = _manifest_versions(spark, table_dir)
+    if not committed:
         raise ValueError(f"no committed versions at {table_dir}")
     best = 0
-    for fi in list_files(spark, root, "v*.json"):
-        name = fi.path.rsplit("/", 1)[-1]
-        v = int(name[1:-5])
+    for v, fi in committed:
         man = _read_json(spark, _manifest_path(table_dir, v))
         at = man.get("committed_at", fi.mtime_ms / 1000.0)
         if at <= ts:
@@ -1709,8 +1732,15 @@ def register_versioned(
         version = resolve_tag(spark, table_dir, tag)
     if asof is not None:
         version = version_asof(spark, table_dir, asof)
+    # ONE listing of ``_manifests`` resolves the head and feeds the
+    # history view (on a remote store each listing is a round trip
+    # per call); it reads the newest ``history_limit`` SURVIVING
+    # entries — a per-version existence walk would probe every
+    # EXPIRED version too, O(lifetime versions) RPCs on a long-lived
+    # table whose retention keeps only a recent window
+    surviving = [v for v, _ in _manifest_versions(spark, table_dir)]
     if version is None:
-        version = current_version(spark, table_dir)
+        version = surviving[-1] if surviving else 0
     df = (
         read_version_where(spark, table_dir, where, version)
         if where is not None
@@ -1726,24 +1756,11 @@ def register_versioned(
             if thresh > 0 and est is not None and est <= thresh:
                 df = F.broadcast(df)
     df.createOrReplaceTempView(name)
-    cur = current_version(spark, table_dir)
-    # the history view lists ``_manifests`` ONCE (one RPC) and reads
-    # the newest ``history_limit`` SURVIVING entries (None = full
-    # history) — a per-version existence walk would probe every
-    # EXPIRED version too, O(lifetime versions) RPCs on a long-lived
-    # table whose retention keeps only a recent window
     rows = []
-    surviving: list[int] = []
-    mdir = f"{table_dir}/{_MANIFESTS}"
-    if path_exists(spark, mdir):
-        for fi in list_files(spark, mdir, "v*.json"):
-            m = re.search(r"v(\d+)\.json$", fi.path)
-            if m and int(m.group(1)) <= cur:
-                surviving.append(int(m.group(1)))
-    surviving = sorted(set(surviving), reverse=True)
+    newest = surviving[::-1]
     if history_limit is not None:
-        surviving = surviving[:history_limit]
-    for v in surviving:
+        newest = newest[:history_limit]
+    for v in newest:
         man_h = _read_json(spark, _manifest_path(table_dir, v))
         rows.append(
             (
@@ -1757,9 +1774,7 @@ def register_versioned(
     spark.createDataFrame(
         rows or [(0, 0, "none", None)],
         "version int, n_dirs int, op string, committed_at double",
-    ).where(f"version <= {cur}").createOrReplaceTempView(
-        f"{name}__history"
-    )
+    ).createOrReplaceTempView(f"{name}__history")
 
 
 def repair_table(
@@ -4376,19 +4391,13 @@ def expire_versions(
     kept_versions = set(range(first_kept, cur + 1)) | tagged
     if older_than is not None:
         cutoff = _ts_to_epoch(older_than)
-        mdir = f"{table_dir}/{_MANIFESTS}"
-        if path_exists(spark, mdir):
-            for fi in list_files(spark, mdir, "v*.json"):
-                m = re.search(r"v(\d+)\.json$", fi.path)
-                if not m:
-                    continue
-                v = int(m.group(1))
-                if v in kept_versions or not (1 <= v <= cur):
-                    continue
-                man_t = _read_json(spark, _manifest_path(table_dir, v))
-                at = man_t.get("committed_at", fi.mtime_ms / 1000.0)
-                if at >= cutoff:
-                    kept_versions.add(v)
+        for v, fi in _manifest_versions(spark, table_dir):
+            if v in kept_versions or not (1 <= v <= cur):
+                continue
+            man_t = _read_json(spark, _manifest_path(table_dir, v))
+            at = man_t.get("committed_at", fi.mtime_ms / 1000.0)
+            if at >= cutoff:
+                kept_versions.add(v)
     referenced: set[str] = set()
     for v in sorted(kept_versions):
         p = _manifest_path(table_dir, v)
@@ -7751,9 +7760,9 @@ def read_table_stats(
 ) -> dict | None:
     """Previously-ANALYZEd statistics for a snapshot (None if that
     version was never analyzed) — one JSON read, no scan."""
-    cur = current_version(spark, table_dir)
-    v = version if version is not None else cur
-    p = f"{table_dir}/_stats/v{v:06d}.json"
+    if version is None:
+        version = current_version(spark, table_dir)
+    p = f"{table_dir}/_stats/v{version:06d}.json"
     return _read_json(spark, p) if path_exists(spark, p) else None
 
 

@@ -1,9 +1,16 @@
-"""Filesystem housekeeping through Hadoop's FileSystem API.
+"""Filesystem housekeeping: POSIX calls for local paths, Hadoop's
+FileSystem API for every other scheme.
 
-Everything here goes through ``org.apache.hadoop.fs.FileSystem`` (via
-the session JVM), not ``os``/``shutil`` — so the same code works on
-local paths in tests and on HDFS/S3A/ABFS on a real cluster, where the
-lake actually lives at 100 TB.
+Remote paths (HDFS/S3A/ABFS on a real cluster, where the lake lives at
+100 TB) go through ``org.apache.hadoop.fs.FileSystem`` via the session
+JVM. Local paths (`local_path`) are served with ``os`` calls instead:
+each py4j call is a ~1 ms round trip, so listing a dir through Hadoop
+costs several per file, and a ``byte[]`` read back across py4j is
+decoded one byte at a time in Python. The POSIX branches return what
+Hadoop's ``LocalFileSystem`` would (same path spelling, same hidden
+checksum files, same mtime resolution), so callers never see which
+branch ran. The choice follows the path's scheme, and for a path with
+no scheme the session's default filesystem; there is no option.
 
 Operators:
 
@@ -24,10 +31,53 @@ Operators:
 from __future__ import annotations
 
 import fnmatch
+import os
 import posixpath
+import weakref
 from dataclasses import dataclass, field
+from urllib.parse import urlparse
 
 from pyspark.sql import SparkSession
+
+
+def local_path(spark: SparkSession, path: str) -> str | None:
+    """The POSIX path behind ``path`` when it names the local
+    filesystem, else None. Local means a ``file:`` URI without an
+    authority (``file:/x``, ``file:///x``), or a path with no scheme
+    when the session's default filesystem (``fs.defaultFS``) is
+    ``file:`` — on a cluster whose default is HDFS, ``/lake/fact`` is
+    an HDFS path and stays with Hadoop.
+    The path is not percent-decoded, as Hadoop's ``Path`` does not
+    decode it either: ``b=p%3Aq`` is a directory of that literal name.
+    This is the one place that decides whether a path may be served
+    with ``os`` calls instead of Hadoop's FileSystem."""
+    parsed = urlparse(path)
+    if parsed.scheme == "":
+        return path if _default_fs_is_local(spark) else None
+    if parsed.scheme != "file" or parsed.netloc:
+        return None
+    # the text after ``file:``, not ``parsed.path``: Hadoop keeps a
+    # ``?`` or ``#`` as part of the path, urlparse would split there
+    rest = path[len("file:"):]
+    return rest[2:] if rest.startswith("//") else rest
+
+
+# SparkContext → whether its Hadoop configuration's fs.defaultFS is
+# the local filesystem. Read once per context (two py4j calls), as the
+# default filesystem is fixed when the context starts (core-site.xml,
+# ``spark.hadoop.fs.defaultFS``).
+_DEFAULT_FS_LOCAL: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
+
+
+def _default_fs_is_local(spark: SparkSession) -> bool:
+    sc = spark.sparkContext
+    local = _DEFAULT_FS_LOCAL.get(sc)
+    if local is None:
+        default = spark._jsc.hadoopConfiguration().get("fs.defaultFS")
+        parsed = urlparse(default or "file:///")
+        local = parsed.scheme == "file" and not parsed.netloc
+        _DEFAULT_FS_LOCAL[sc] = local
+    return local
 
 
 def _fs(spark: SparkSession, path: str):
@@ -41,6 +91,9 @@ def path_exists(spark: SparkSession, path: str) -> bool:
     """True iff ``path`` exists on its filesystem. An explicit probe —
     unlike catching ``Exception`` around a read, a transport error
     here surfaces instead of masquerading as 'no table'."""
+    local = local_path(spark, path)
+    if local is not None:
+        return os.path.exists(local)
     fs, hpath, _ = _fs(spark, path)
     return bool(fs.exists(hpath))
 
@@ -57,7 +110,11 @@ def list_files(
 ) -> list[FileInfo]:
     """Recursive file listing under ``root`` (data files only; Spark
     metadata like ``_SUCCESS`` is still listed — filter via
-    ``pattern`` e.g. ``*.parquet`` / ``*.csv`` if unwanted)."""
+    ``pattern`` e.g. ``*.parquet`` / ``*.csv`` if unwanted). A file
+    given as ``root`` lists as itself; a missing root lists as []."""
+    local = local_path(spark, root)
+    if local is not None:
+        return _list_local(local, pattern)
     fs, hpath, _ = _fs(spark, root)
     if not fs.exists(hpath):
         return []
@@ -73,6 +130,54 @@ def list_files(
         out.append(
             FileInfo(path=p, size=int(st.getLen()), mtime_ms=int(st.getModificationTime()))
         )
+    return out
+
+
+def _is_checksum(name: str) -> bool:
+    # ChecksumFileSystem's listing filter: ``.<name>.crc`` is hidden
+    return name.startswith(".") and name.endswith(".crc")
+
+
+def _list_local(root: str, pattern: str | None) -> list[FileInfo]:
+    """`list_files` for a local root, with the result Hadoop's
+    ``LocalFileSystem.listFiles`` gives: ``file:``-prefixed absolute
+    paths, checksum files skipped (other hidden files kept), symlinked
+    dirs followed, mtimes truncated to ms. Sorted per directory. An
+    entry removed while the walk runs (a commit's tmp or lock file,
+    Spark's ``_temporary`` dirs) is skipped, as Hadoop's per-entry
+    ``FileNotFoundException`` handling skips it."""
+
+    def _raise(err: OSError) -> None:
+        if not isinstance(err, FileNotFoundError):
+            raise err
+
+    root = os.path.abspath(root)
+    if os.path.isdir(root):
+        walk = os.walk(root, onerror=_raise, followlinks=True)
+    elif os.path.exists(root):
+        walk = [(os.path.dirname(root), [], [os.path.basename(root)])]
+    else:
+        return []
+    out: list[FileInfo] = []
+    for dirpath, dirnames, filenames in walk:
+        dirnames[:] = sorted(d for d in dirnames if not _is_checksum(d))
+        for name in sorted(filenames):
+            if _is_checksum(name) or (
+                pattern is not None and not fnmatch.fnmatch(name, pattern)
+            ):
+                continue
+            p = os.path.join(dirpath, name)
+            try:
+                st = os.stat(p)
+            except FileNotFoundError:
+                continue
+            out.append(
+                FileInfo(
+                    path=f"file:{p}",
+                    size=st.st_size,
+                    mtime_ms=st.st_mtime_ns // 1_000_000,
+                )
+            )
     return out
 
 

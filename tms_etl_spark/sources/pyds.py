@@ -454,16 +454,13 @@ def _read_manifest_py(table_dir: str, version: int) -> dict:
 
 
 def _current_version_py(table_dir: str) -> int:
-    import os
+    from tms_etl_spark.operators.versioned import _committed_manifests
+    from tms_etl_spark.sources.fs import _list_local
 
-    man_dir = os.path.join(table_dir, "_manifests")
-    if not os.path.isdir(man_dir):
-        return 0
-    cur = 0
-    for f in os.listdir(man_dir):
-        if f.startswith("v") and f.endswith(".json"):
-            cur = max(cur, int(f[1:-5]))
-    return cur
+    committed = _committed_manifests(
+        _list_local(os.path.join(table_dir, "_manifests"), "v*.json")
+    )
+    return committed[-1][0] if committed else 0
 
 
 def _live_files_py(table_dir: str, man: dict) -> list[str]:
